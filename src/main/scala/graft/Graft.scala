@@ -430,7 +430,8 @@ final case class GraftTable(g: Graft, name: String) {
       case Some(r) =>
         val doomed = r.flatMap(ordered(_)).toSeq
         g.catalog.replaceDirs(name, doomed,
-          g.catalog.readLeafDirs(doomed), nowMs)
+          g.catalog.readLeafDirs(doomed), nowMs,
+          knownBytes = Some(r.map(sizes).sum))
         doomed
     }
   }

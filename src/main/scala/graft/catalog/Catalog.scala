@@ -445,6 +445,7 @@ final class FenceTrippedException(msg: String)
   * All timestamps are caller-supplied (`nowMs`) for determinism.
   */
 final class Catalog(spark: SparkSession, root: String) {
+  import Catalog.{DeltaStats, Written, maxOf, minOf}
 
   private def fs: FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -813,12 +814,26 @@ final class Catalog(spark: SparkSession, root: String) {
     * §2.1), split into per-family leaf dirs (`_fam={name}` — the
     * reference's one-store-file-per-family shape) so each family gets ITS
     * OWN physical attrs: families are grouped by identical
-    * (compression, bloom) and each group is one write job — a table with
-    * all-default families costs exactly one job, like before. Returns the
-    * committed leaf dirs. */
+    * (compression, bloom) and each group is one write — a table with
+    * all-default families writes once.
+    *
+    * Everything the commit needs to know about the batch is observed
+    * INSIDE those writes (`Dataset.observe`), the way the reference's
+    * writer records a store file's entry count and key span in the
+    * file's own metadata (`StoreFile.java:445-452`): the delta's raw
+    * count, row span and put count (the manifest roll-forward) and, per
+    * declared family, the cell and tombstone counts that land in each
+    * leaf's [[graft.core.StoreStats]]. No pass over the written files.
+    *
+    * `knownBytes` is the batch's size when it is known without a job
+    * (see [[append]], [[replaceDirs]]); a batch that fits one file split
+    * (`spark.sql.files.maxPartitionBytes`, the unit Spark itself scans
+    * files in) is written as ONE sorted partition — one job, where range
+    * partitioning costs a sampling job, an exchange and the write. */
   private def writeCells(base: String, cells: DataFrame,
-      desc: TableDescriptor): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, lit, not, when}
+      desc: TableDescriptor, knownBytes: Option[Long]): Written = {
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, not, when}
     // The intra-call writes below use SaveMode.Append (several
     // physical-attr groups share one base dir), so restore the
     // ErrorIfExists contract HERE: a retried append() reusing the same
@@ -840,8 +855,11 @@ final class Catalog(spark: SparkSession, root: String) {
           acc + when(col("row") >= lit(b), 1).otherwise(0)
         })
     val partCols = if (bounds.isEmpty) Seq("_fam") else Seq("_fam", "_bucket")
-    def write(df: DataFrame, compression: Option[String],
-        bloom: BloomType.Value): Unit = {
+    val single = knownBytes.exists(
+      _ <= cells.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+    val isPut = col("kind") === graft.core.CellKind.Put
+    def write(df: DataFrame, fams: Seq[String], compression: Option[String],
+        bloom: BloomType.Value): Option[org.apache.spark.sql.Row] = {
       // The sort MUST lead with the partitionBy columns: the dynamic-
       // partition writer re-sorts any task whose rows are not already
       // ordered by them, and that re-sort is NOT stable — it silently
@@ -855,10 +873,31 @@ final class Catalog(spark: SparkSession, root: String) {
       // pruning and the feed's merge assembly are designed around.
       val sortCols = partCols.map(col) ++ Seq(col("row"), col("family"),
         col("qualifier"), col("ts").desc, col("seq").desc)
-      var w = withBucket(df)
+      val laid = withBucket(df)
         .withColumn("_fam", col("family")) // keep family IN the data files
-        .repartitionByRange(desc.splitKeys, col("row"))
-        .sortWithinPartitions(sortCols: _*)
+      // The one sorted partition keeps the committed layout: the sort
+      // still leads with (_fam[, _bucket]), so each leaf (and each
+      // boundary subdir) gets one sorted file.
+      val placed =
+        if (single) laid.coalesce(1)
+        else laid.repartitionByRange(desc.splitKeys, col("row"))
+      // The observe sits AFTER the sort, above the range exchange: the
+      // range-sampling job re-runs the exchange's CHILD, so metrics
+      // collected below it would count every row twice. CollectMetrics
+      // passes its child's ordering through, so the writer still sees
+      // the sort and adds none of its own. Per-family counts cover the
+      // DECLARED families only; an undeclared family's leaf stays
+      // UNKNOWN (no stats file).
+      val obs = Observation()
+      val perFam = fams.zipWithIndex.flatMap { case (f, i) =>
+        val inFam = col("family") === f
+        Seq(count(when(inFam, 1)).as(s"rows$i"),
+          count(when(inFam && !isPut, 1)).as(s"tombstones$i"))
+      }
+      var w = placed.sortWithinPartitions(sortCols: _*)
+        .observe(obs, count(lit(1)).as("rows"),
+          (min(col("row")).as("lo") +: max(col("row")).as("hi") +:
+            count(when(isPut, 1)).as("puts") +: perFam): _*)
         .write.mode(SaveMode.Append).partitionBy(partCols: _*)
       compression.foreach(c => w = w.option("compression", c))
       // Bloom filters per BloomType: ROW = the reference's point-get
@@ -871,70 +910,68 @@ final class Catalog(spark: SparkSession, root: String) {
       if (bloom == BloomType.RowCol)
         w = w.option("parquet.bloom.filter.enabled#qualifier", "true")
       w.parquet(base)
+      Catalog.observed(obs)
     }
     val nonDefault = desc.families
       .filter(f => f.compression.isDefined || f.bloomFilter != BloomType.None)
       .groupBy(f => (f.compression, f.bloomFilter)).toSeq
       .map { case ((c, b), fs) => (c, b, fs.map(_.name)) }
-    if (nonDefault.isEmpty) write(cells, None, bloom = BloomType.None)
-    else {
-      val nd = nonDefault.flatMap(_._3)
-      // default-attrs group also catches cells of undeclared families
-      write(cells.filter(not(col("family").isin(nd: _*))), None,
-        bloom = BloomType.None)
-      nonDefault.foreach { case (c, b, fams) =>
-        write(cells.filter(col("family").isin(fams: _*)), c, b)
-      }
-    }
+    val nd = nonDefault.flatMap(_._3)
+    val defaultFams = desc.families.map(_.name).filterNot(nd.contains)
+    // default-attrs group also catches cells of undeclared families
+    val observed =
+      (defaultFams -> write(
+        if (nd.isEmpty) cells else cells.filter(not(col("family").isin(nd: _*))),
+        defaultFams, None, BloomType.None)) +:
+        nonDefault.map { case (c, b, fams) =>
+          fams -> write(cells.filter(col("family").isin(fams: _*)), fams, c, b)
+        }
+    val delta =
+      if (observed.exists(_._2.isEmpty)) None
+      else Some(observed.flatMap(_._2).map { r =>
+        def key(i: Int) = if (r.isNullAt(i)) None else Some(r.getAs[Array[Byte]](i))
+        DeltaStats(r.getLong(0), key(1), key(2), r.getLong(3))
+      }.reduce(_ merge _))
     val bp = new Path(base)
-    if (!fs.exists(bp)) Seq.empty // an empty batch writes nothing
+    // an empty batch writes no leaf: nothing to list or record
+    if (delta.exists(_.rows == 0) || !fs.exists(bp)) Written(Nil, delta)
     else {
       val leaves = fs.listStatus(bp).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(Catalog.FamDirPrefix))
         .map(_.getPath.toString).sorted
-      // Write-side tombstone stats (r17): record each leaf dir's exact
-      // non-Put count while the delta is in hand — ONE column-pruned agg
-      // over the just-written files (leaves are per-family dirs and
-      // `family` is in the data, so per-family == per-leaf). Read side:
-      // [[graft.read.Resolve.masked]] proves tombstone-freeness from
-      // these files with zero Spark jobs instead of a per-query probe.
-      // Each committed dir is immutable, so the count is exact forever —
-      // no roll-forward arithmetic across appends or partial compactions.
-      // Best-effort: a stats failure must not fail the data commit.
-      try {
-        import org.apache.spark.sql.functions.count
-        val counts = readDirs(leaves)
-          .groupBy("family")
-          .agg(count(when(col("kind") =!= graft.core.CellKind.Put, lit(1)))
-            .as("_t"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        leaves.foreach { d =>
-          val fam = new Path(d).getName.stripPrefix(Catalog.FamDirPrefix)
-          // a leaf whose family key is absent from the agg (dir-name
-          // escaping mismatch) stays UNKNOWN rather than claiming 0
-          counts.get(fam).foreach(t =>
-            graft.core.StoreStats.write(fs, new Path(d), t))
+      // leaves are per-family dirs and `family` is in the data, so
+      // per-family == per-leaf; a leaf whose family is absent from the
+      // observed set (undeclared, or a dir-name escaping mismatch) stays
+      // UNKNOWN rather than claiming 0
+      val famCounts = observed.flatMap { case (fams, r) =>
+        r.toSeq.flatMap(r => fams.indices.map(i =>
+          fams(i) -> (r.getLong(4 + 2 * i), r.getLong(5 + 2 * i))))
+      }.toMap
+      leaves.foreach { d =>
+        val fam = new Path(d).getName.stripPrefix(Catalog.FamDirPrefix)
+        famCounts.get(fam).foreach { case (rows, tombstones) =>
+          graft.core.StoreStats.write(fs, new Path(d), tombstones, Some(rows))
         }
-      } catch { case scala.util.control.NonFatal(_) => () }
-      leaves
+      }
+      Written(leaves, delta)
     }
   }
 
   // ---- persisted per-version stats (r15, [[ManifestStats]]): computed
   // while the data is in hand, so queries never pay stat jobs.
 
-  /** One column-pruned agg over `dirs`: (raw cells, min row, max row,
-    * put cells). The O(delta) roll-forward input — on an append this
-    * reads ONLY the just-written leaves. */
-  private def statAgg(dirs: Seq[String])
-      : (Long, Option[Array[Byte]], Option[Array[Byte]], Long) = {
-    if (dirs.isEmpty) return (0L, None, None, 0L)
+  /** One column-pruned agg over `dirs`: the [[DeltaStats]] of files
+    * graft did not write itself — a [[bulkLoad]]ed dir — or of a write
+    * whose observed metrics did not arrive ([[Catalog.observed]]).
+    * [[writeCells]] observes the same numbers inside its write. */
+  private def statAgg(dirs: Seq[String]): DeltaStats = {
+    if (dirs.isEmpty) return DeltaStats(0L, None, None, 0L)
     import org.apache.spark.sql.functions.{col, count, lit, max, min, sum, when}
     val r = readDirs(dirs).agg(count(lit(1)), min(col("row")),
       max(col("row")),
       sum(when(col("kind") === graft.core.CellKind.Put, 1L).otherwise(0L)))
       .collect()(0)
-    (r.getLong(0),
+    DeltaStats(r.getLong(0),
       if (r.isNullAt(1)) None else Some(r.getAs[Array[Byte]](1)),
       if (r.isNullAt(2)) None else Some(r.getAs[Array[Byte]](2)),
       if (r.isNullAt(3)) 0L else r.getLong(3))
@@ -996,31 +1033,35 @@ final class Catalog(spark: SparkSession, root: String) {
   /** O(delta) stats roll-forward for an append/bulk-load commit: raw
     * rows add exactly; the resolved upper bound grows by the delta's
     * PUTS only (new puts may shadow old entries, never mint extra live
-    * ones; tombstones mint none); the span widens to the union. A
-    * table's FIRST batch computes the full stats instead (histogram
-    * included — CREATE INDEX's initial build lands here, so a fresh
-    * index is guard-estimable from birth). Legacy manifests (None)
-    * stay legacy until a full rewrite or [[analyzeTable]]. */
+    * ones; tombstones mint none); the span widens to the union. The
+    * delta's numbers are the ones [[writeCells]] observed while writing
+    * (zero jobs); a bulk-loaded dir, or a write whose metrics did not
+    * arrive, pays one [[statAgg]]. A table's FIRST batch computes the
+    * full stats instead (histogram included — CREATE INDEX's initial
+    * build lands here, so a fresh index is guard-estimable from birth).
+    * Legacy manifests (None) stay legacy until a full rewrite or
+    * [[analyzeTable]]. */
   private def mergeDeltaStats(prev: Option[ManifestStats],
-      newLeaves: Seq[String]): Option[ManifestStats] =
+      w: Written): Option[ManifestStats] =
     prev.map { p =>
-      if (newLeaves.isEmpty) p
-      else if (p.rows == 0) fullStats(newLeaves)
+      if (w.leaves.isEmpty) p
+      else if (p.rows == 0) fullStats(w.leaves)
       else {
-        val (n, lo, hi, puts) = statAgg(newLeaves)
-        ManifestStats(p.rows + n, p.resolvedRows + puts,
-          minKey = minOf(p.minKey, lo), maxKey = maxOf(p.maxKey, hi),
+        val d = w.delta.getOrElse(statAgg(w.leaves))
+        ManifestStats(p.rows + d.rows, p.resolvedRows + d.puts,
+          minKey = minOf(p.minKey, d.minRow), maxKey = maxOf(p.maxKey, d.maxRow),
           p.histRows, p.histogram,
-          unseenRows = p.unseenRows + n)
+          unseenRows = p.unseenRows + d.rows)
       }
     }
 
-  private def minOf(a: Option[Array[Byte]], b: Option[Array[Byte]]) =
-    (a ++ b).reduceOption((x, y) =>
-      if (graft.core.Bytes.compareTo(x, y) <= 0) x else y)
-  private def maxOf(a: Option[Array[Byte]], b: Option[Array[Byte]]) =
-    (a ++ b).reduceOption((x, y) =>
-      if (graft.core.Bytes.compareTo(x, y) >= 0) x else y)
+  /** Exact stored cell count of `dirs` from their recorded
+    * [[graft.core.StoreStats]] — None when any dir lacks the count. */
+  private def recordedRows(dirs: Seq[String]): Option[Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val counts = dirs.map(d => graft.core.StoreStats.rows(conf, new Path(d)))
+    if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
+  }
 
   /** ANALYZE TABLE: recompute and persist FULL stats for the CURRENT
     * data in a metadata-only manifest commit (data dirs untouched) —
@@ -1069,7 +1110,14 @@ final class Catalog(spark: SparkSession, root: String) {
     *    temporarily invisible through the index, healed by
     *    `SecondaryIndex.rebuild` (or replaying the append) — an
     *    availability gap, never an integrity violation. */
-  def append(t: String, cells0: DataFrame, nowMs: Long): Manifest = {
+  def append(t: String, cells0: DataFrame, nowMs: Long): Manifest =
+    append(t, cells0, nowMs, Catalog.localBytes(cells0))
+
+  /** [[append]] with `knownBytes`, the batch's size when it is known
+    * without a Spark job — it lets [[writeCells]] skip range sampling on
+    * a small batch. */
+  private def append(t: String, cells0: DataFrame, nowMs: Long,
+      knownBytes0: Option[Long]): Manifest = {
     val cur = currentManifest(t)
     require(!cur.descriptor.readOnly, s"table $t is read-only")
     // With registered indexes the batch is evaluated MORE THAN ONCE
@@ -1079,9 +1127,22 @@ final class Catalog(spark: SparkSession, root: String) {
     // different cells to the main table than to its indexes — a silent
     // desync a covered read never detects. Pin the batch to one
     // evaluation before fanning out; index-free appends (the common
-    // path) evaluate once anyway and skip the materialization.
-    val cells =
-      if (cur.descriptor.indexes.isEmpty) cells0 else cells0.localCheckpoint()
+    // path) evaluate once anyway and skip the materialization. That one
+    // evaluation also measures the batch's bytes (observed — no extra
+    // job), which sizes the writes below.
+    val (cells, knownBytes) =
+      if (cur.descriptor.indexes.isEmpty) (cells0, knownBytes0)
+      else {
+        import org.apache.spark.sql.Observation
+        import org.apache.spark.sql.functions.{coalesce, col, lit, octet_length, sum}
+        val obs = Observation()
+        val pinned = cells0.observe(obs, sum(octet_length(col("row")) +
+          octet_length(col("family")) + octet_length(col("qualifier")) +
+          coalesce(octet_length(col("value")), lit(0)) +
+          Catalog.FixedCellBytes)).localCheckpoint()
+        (pinned, knownBytes0.orElse(Catalog.observed(obs).map(r =>
+          if (r.isNullAt(0)) 0L else r.getLong(0))))
+      }
     // Pre-append logical view, read only by covered-index tombstone
     // maintenance (and only when the batch actually has tombstones).
     // Captured from `cur`, so it stays the PRE-state even when the
@@ -1093,28 +1154,24 @@ final class Catalog(spark: SparkSession, root: String) {
     }
     val (coveredIxs, pointerIxs) =
       cur.descriptor.indexes.partition(_.covered.nonEmpty)
-    pointerIxs.foreach { ix =>
+    def maintain(ix: IndexDescriptor): Unit =
       append(ix.indexTable,
-        graft.read.SecondaryIndex.maintenanceDelta(pre, cells, ix),
-        nowMs): Unit
-    }
+        graft.read.SecondaryIndex.maintenanceDelta(pre, cells, ix), nowMs,
+        graft.read.SecondaryIndex.deltaBytesBound(ix, knownBytes)): Unit
+    pointerIxs.foreach(maintain)
     val storage =
       if (cur.descriptor.saltBuckets > 0)
         graft.core.Salt.saltCells(cells, cur.descriptor.saltBuckets)
       else cells
     val v = cur.version + 1
-    val leaves = writeCells(
-      new Path(tableDir(t), s"data-$v").toString, storage, cur.descriptor)
+    val written = writeCells(new Path(tableDir(t), s"data-$v").toString,
+      storage, cur.descriptor, knownBytes)
     val m = cur.copy(version = v, createdMs = nowMs,
-      dataDirs = cur.dataDirs ++ leaves,
-      stats = mergeDeltaStats(cur.stats, leaves))
+      dataDirs = cur.dataDirs ++ written.leaves,
+      stats = mergeDeltaStats(cur.stats, written))
     commitManifest(m)
     uncacheHot(cur)
-    coveredIxs.foreach { ix =>
-      append(ix.indexTable,
-        graft.read.SecondaryIndex.maintenanceDelta(pre, cells, ix),
-        nowMs): Unit
-    }
+    coveredIxs.foreach(maintain)
     m
   }
 
@@ -1177,8 +1234,8 @@ final class Catalog(spark: SparkSession, root: String) {
         s"saltBuckets is immutable (table $t has ${cur.descriptor.saltBuckets})")
     }
     val v = cur.version + 1
-    val leaves = writeCells(
-      new Path(tableDir(t), s"compact-$v").toString, cells, desc)
+    val leaves = writeCells(new Path(tableDir(t), s"compact-$v").toString,
+      cells, desc, knownBytes = None).leaves
     // a FULL rewrite is the designated stats (re)computation point:
     // exact resolved count + fresh histogram over data this commit just
     // shuffled anyway — compactions and index rebuilds land here.
@@ -1202,24 +1259,26 @@ final class Catalog(spark: SparkSession, root: String) {
     * folds a file subset) — the large old batches are never re-read or
     * re-written, so maintenance cost tracks the small-delta tail, not
     * the table. Replaced dirs stay on disk until `vacuum`, exactly like
-    * [[replaceData]]. */
+    * [[replaceData]]. `knownBytes` sizes the rewrite as in [[append]]
+    * (a minor compaction passes the removed leaves' on-disk bytes). */
   def replaceDirs(t: String, removedLeaves: Seq[String], cells: DataFrame,
-      nowMs: Long): Manifest = {
+      nowMs: Long, knownBytes: Option[Long] = None): Manifest = {
     val cur = currentManifest(t)
     val gone = removedLeaves.toSet
     val unknown = gone -- cur.dataDirs.toSet
     require(unknown.isEmpty,
       s"replaceDirs: not in the current manifest of $t: ${unknown.take(3)}")
     val v = cur.version + 1
-    val leaves = writeCells(
-      new Path(tableDir(t), s"compact-$v").toString, cells, cur.descriptor)
+    val written = writeCells(new Path(tableDir(t), s"compact-$v").toString,
+      cells, cur.descriptor, knownBytes)
     // a PARTIAL compaction must stay O(delta) — stats roll forward:
-    // raw rows subtract the removed leaves' footer count and add the
-    // rewrite's; the resolved upper bound clamps to the surviving raw
-    // total (a rewrite never ADDS live entries, so the previous bound
-    // stays sound); the span only widens (stale-wide = decline-leaning,
-    // cost-only); the histogram carries (removals only LOWER true
-    // in-range mass, so its upper bounds stay sound) and the
+    // raw rows subtract the removed leaves' recorded counts (a count job
+    // only when some leaf predates recorded counts) and add the
+    // rewrite's observed count; the resolved upper bound clamps to the
+    // surviving raw total (a rewrite never ADDS live entries, so the
+    // previous bound stays sound); the span only widens (stale-wide =
+    // decline-leaning, cost-only); the histogram carries (removals only
+    // LOWER true in-range mass, so its upper bounds stay sound) and the
     // EXPLICIT unseen-mass term carries UNCHANGED — a rewrite mints no
     // histogram-unseen rows, and decreasing it when the removed leaves
     // were appended-after-histogram ones would at worst overcount,
@@ -1227,19 +1286,21 @@ final class Catalog(spark: SparkSession, root: String) {
     // raw total was unsound). The next FULL rewrite or analyzeTable
     // re-tightens everything.
     val stats = cur.stats.map { p =>
-      val removed = readDirs(removedLeaves.distinct).count()
-      val (n, lo, hi, _) = statAgg(leaves)
-      val raw = math.max(0L, p.rows - removed) + n
+      val doomed = removedLeaves.distinct
+      val removed = recordedRows(doomed).getOrElse(readDirs(doomed).count())
+      val d = written.delta.getOrElse(statAgg(written.leaves))
+      val raw = math.max(0L, p.rows - removed) + d.rows
       ManifestStats(raw, math.min(p.resolvedRows, raw),
-        minKey = minOf(p.minKey, lo), maxKey = maxOf(p.maxKey, hi),
+        minKey = minOf(p.minKey, d.minRow), maxKey = maxOf(p.maxKey, d.maxRow),
         p.histRows, p.histogram, unseenRows = p.unseenRows)
     }
-    // re-fence immediately before the commit (ADVICE r15): the stats
-    // roll-forward above runs a removed-leaf count job + statAgg between
-    // the manifest read and the write — without this check a concurrent
-    // append's commit at the same v+1 could be silently overwritten
-    // (the serialized-competitor class commitManifest's readback verify
-    // cannot catch), mirroring analyzeTable's re-fence.
+    // re-fence immediately before the commit (ADVICE r15): the rewrite's
+    // write job (and a count job for leaves without recorded counts)
+    // runs between the manifest read and the commit — without this
+    // check a concurrent append's commit at the same v+1 could be
+    // silently overwritten (the serialized-competitor class
+    // commitManifest's readback verify cannot catch), mirroring
+    // analyzeTable's re-fence.
     val now = currentManifest(t)
     if (now.version != cur.version)
       throw new FenceTrippedException(
@@ -1247,7 +1308,7 @@ final class Catalog(spark: SparkSession, root: String) {
           s"table moved to ${now.version} mid-rewrite — re-run against " +
           "the current version")
     val m = cur.copy(version = v, createdMs = nowMs,
-      dataDirs = cur.dataDirs.filterNot(gone) ++ leaves, stats = stats)
+      dataDirs = cur.dataDirs.filterNot(gone) ++ written.leaves, stats = stats)
     commitManifest(m)
     uncacheHot(cur)
     m
@@ -1283,7 +1344,7 @@ final class Catalog(spark: SparkSession, root: String) {
     val v = cur.version + 1
     val m = cur.copy(version = v, createdMs = nowMs,
       dataDirs = cur.dataDirs :+ dataDir,
-      stats = mergeDeltaStats(cur.stats, Seq(dataDir)))
+      stats = mergeDeltaStats(cur.stats, Written(Seq(dataDir), None)))
     commitManifest(m)
     m
   }
@@ -1371,6 +1432,56 @@ object Catalog {
     * sample target — see [[ManifestStats]]); consumers
     * ([[graft.sql.GraftRouteGuard]]) widen every bound by it. */
   val HistRankErr = 0.005
+
+  private[catalog] def minOf(a: Option[Array[Byte]], b: Option[Array[Byte]]) =
+    (a ++ b).reduceOption((x, y) =>
+      if (graft.core.Bytes.compareTo(x, y) <= 0) x else y)
+  private[catalog] def maxOf(a: Option[Array[Byte]], b: Option[Array[Byte]]) =
+    (a ++ b).reduceOption((x, y) =>
+      if (graft.core.Bytes.compareTo(x, y) >= 0) x else y)
+
+  /** (raw cells, min row, max row, put cells) of a written delta. */
+  private[catalog] final case class DeltaStats(rows: Long, minRow: Option[Array[Byte]],
+      maxRow: Option[Array[Byte]], puts: Long) {
+    def merge(o: DeltaStats): DeltaStats = DeltaStats(rows + o.rows,
+      minOf(minRow, o.minRow), maxOf(maxRow, o.maxRow), puts + o.puts)
+  }
+
+  /** The committed leaf dirs of one [[Catalog.writeCells]] call and the delta
+    * stats it observed (None when the metrics did not arrive). */
+  private[catalog] final case class Written(leaves: Seq[String],
+      delta: Option[DeltaStats])
+
+  /** Bytes of a cell's fixed-width fields (ts, kind, seq), added to its
+    * variable-length ones when [[Catalog.append]] measures a batch. */
+  private[catalog] val FixedCellBytes = 17
+
+  /** In-memory bytes of a driver-resident batch — a `LocalRelation`
+    * plan, which [[graft.write.Mutations.toDF]] builds — read off its
+    * rows with no Spark job. None for any other plan. */
+  private[catalog] def localBytes(df: DataFrame): Option[Long] =
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val sizes = l.data.collect {
+          case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
+            u.getSizeInBytes.toLong
+        }
+        if (sizes.size == l.data.size) Some(sizes.sum) else None
+      case _ => None
+    }
+
+  /** How long a commit waits for a finished write's observed metrics.
+    * They arrive with the write's completion (milliseconds); the bound
+    * only keeps a lost delivery from blocking a commit forever — the
+    * caller then falls back to a stats job. */
+  private val ObserveWait = scala.concurrent.duration.Duration(60, "s")
+
+  /** The metrics of `obs` once its (already finished) action reported
+    * them; None if they did not arrive within [[ObserveWait]]. */
+  private[catalog] def observed(obs: org.apache.spark.sql.Observation)
+      : Option[org.apache.spark.sql.Row] =
+    try Some(scala.concurrent.Await.result(obs.future, ObserveWait))
+    catch { case _: java.util.concurrent.TimeoutException => None }
 
   /** Lazy stat jobs actually RUN (legacy-manifest fallbacks only) —
     * the test seam behind "a build-persisted table never pays a stat

@@ -558,6 +558,19 @@ object SecondaryIndex {
       .unionByName(
         deleteIndexCells(mainPre, delta, ix.family, ix.qualifier, ix.covered))
 
+  /** Upper bound on the bytes of [[maintenanceDelta]] for a batch of
+    * `batchBytes`, when the delta's shape bounds it: a pointer-only
+    * index's delta is a per-cell projection that emits at most one cell
+    * per batch cell, keyed `value ++ 0x00 ++ row` and pointing back at
+    * `row` — at most twice the batch cell's bytes (the 1-byte
+    * separator, family `i` and qualifier `r` fit in the 17 fixed-width
+    * bytes the batch measure counts per cell). Composite and covered
+    * deltas join, so their size is not bounded by the batch. */
+  def deltaBytesBound(ix: graft.catalog.IndexDescriptor,
+      batchBytes: Option[Long]): Option[Long] =
+    if (ix.moreColumns.isEmpty && ix.covered.isEmpty) batchBytes.map(2 * _)
+    else None
+
   /** COMPOSITE key blob: member values joined by the 0x00 separator, in
     * the index's declared column order. Prefix-free under the same
     * constraint as composite row keys (members must not embed 0x00

@@ -42,9 +42,10 @@ import org.apache.spark.util.SerializableConfiguration
   * (row, family, qualifier, ts desc, seq desc) — `Catalog.writeCells` is
   * the single append path, and ALL families of one batch share the SAME
   * range partitioning (one write job splits per-family leaf dirs AFTER
-  * the range repartition). So within a version, the files holding one
-  * row's cells — at most one per family — cover row ranges that
-  * INTERSECT, while files of different range partitions are row-disjoint.
+  * the range repartition; a small batch is one partition). So within a
+  * version, the files holding one row's cells — at most one per family —
+  * cover row ranges that INTERSECT, while files of different range
+  * partitions are row-disjoint.
   * Planning groups a version's files by that property (parquet footer
   * min/max of `row` + interval union-find; any file without stats
   * collapses the version to one conservative group), and each group is

@@ -105,10 +105,12 @@ object Mutations {
       .agg(sum(col("delta")).as("_delta"))
     // Scope the current-latest view to touched rows via semi-join; no
     // broadcast hint — AQE picks broadcast when the batch is small and a
-    // shuffle join when a bulk increment touches billions of rows.
+    // shuffle join when a bulk increment touches billions of rows. A
+    // semi-join ignores duplicate keys, so the keys need no distinct (a
+    // distinct costs an aggregate exchange: one more job).
     val current = Resolve(
-      table.join(deltas.select("row").distinct(), Seq("row"), "left_semi"),
-      ReadView(maxVersions = 1))
+      table.join(increments.select("row"), Seq("row"), "left_semi"),
+      CurrentValue)
       .select(col("row"), col("family"), col("qualifier"),
         Bytes.asLong(col("value")).as("_cur"))
     deltas.join(current, Seq("row", "family", "qualifier"), "left")
@@ -131,8 +133,8 @@ object Mutations {
     */
   def checkAndMutate(table: DataFrame, checks: DataFrame, batch: DataFrame): DataFrame = {
     val current = Resolve(
-      table.join(checks.select("row").distinct(), Seq("row"), "left_semi"),
-      ReadView(maxVersions = 1))
+      table.join(checks.select("row"), Seq("row"), "left_semi"),
+      CurrentValue)
       .select(col("row").as("_cr"), col("family").as("_cf"),
         col("qualifier").as("_cq"), col("value").as("_cv"))
     val accepted = checks
@@ -141,9 +143,16 @@ object Mutations {
           col("qualifier") === col("_cq"), "left")
       .filter(col("expected") <=> col("_cv"))
       .select("row")
-      .distinct()
     batch.join(accepted, Seq("row"), "left_semi")
   }
+
+  /** The current-value read of [[increment]] and [[checkAndMutate]]:
+    * newest version, full tombstone masking without the probe (see
+    * [[ReadView.tombstoneFree]]). Their frame is semi-joined to the
+    * batch's rows, so masking it costs less than the probe, which
+    * re-runs the semi-join — three jobs on any table holding a
+    * tombstone. */
+  private val CurrentValue = ReadView(maxVersions = 1, tombstoneFree = Some(false))
 
   private def longToBytes(c: org.apache.spark.sql.Column) =
     graft.core.CellCodec.longBytes(c)
