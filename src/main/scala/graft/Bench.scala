@@ -36,7 +36,10 @@ object Bench {
     // must never beat a real run in the min, and a query with zero
     // successful rounds reports a sentinel -1 instead of a bogus
     // time-to-failure.
+    // Each query is timed cache-cold: an intermediate an earlier query
+    // (or round) left cached would otherwise serve the timed run.
     def timedRound(): Map[String, Option[Double]] = qs.map { q =>
+      spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val ok =
         try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }

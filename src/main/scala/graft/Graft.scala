@@ -387,10 +387,19 @@ final case class GraftTable(g: Graft, name: String) {
     g.catalog.append(name, batch, nowMs)
   def increment(increments: DataFrame, nowMs: Long): Unit =
     g.catalog.append(name,
-      Mutations.increment(logicalCells, increments, nowMs), nowMs)
+      Mutations.increment(logicalCells, increments, nowMs,
+        scope = keyScope), nowMs)
   def checkAndMutate(checks: DataFrame, batch: DataFrame, nowMs: Long): Unit =
     g.catalog.append(name,
-      Mutations.checkAndMutate(logicalCells, checks, batch), nowMs)
+      Mutations.checkAndMutate(logicalCells, checks, batch, keyScope), nowMs)
+
+  /** A keyed read's scope on a salted table: the keys salted JVM-side
+    * ([[Salt.scopeKeys]]), so the read stays parquet-pruned. None on an
+    * unsalted table, whose logical and storage keys agree. */
+  private def keyScope: Option[Seq[Array[Byte]] => DataFrame] = {
+    val n = descriptor.saltBuckets
+    if (n <= 0) None else Some(keys => Salt.scopeKeys(cells, n, keys))
+  }
 
   /** Major compaction (`majorCompact:736`): rewrite to the resolved view
     * under the family descriptor's maxVersions/TTL, dropping tombstones.

@@ -842,6 +842,10 @@ final class Catalog(spark: SparkSession, root: String) {
     // layout.
     require(!fs.exists(new Path(base)),
       s"data dir already exists (retried or concurrent commit?): $base")
+    // an empty driver-resident batch (e.g. the index delta of a batch
+    // that never touches the indexed column) writes nothing, with no job
+    if (Catalog.driverResident(cells).exists(_.data.isEmpty))
+      return Written(Nil, Some(DeltaStats(0L, None, None, 0L)))
     // Explicit pre-split boundaries: bucket i = number of boundaries <=
     // row (bytewise — Spark's BinaryType ordering matches Bytes.compareTo,
     // BytesSpec-asserted). partitionBy on the bucket puts each boundary
@@ -1111,12 +1115,12 @@ final class Catalog(spark: SparkSession, root: String) {
     *    `SecondaryIndex.rebuild` (or replaying the append) — an
     *    availability gap, never an integrity violation. */
   def append(t: String, cells0: DataFrame, nowMs: Long): Manifest =
-    append(t, cells0, nowMs, Catalog.localBytes(cells0))
+    append(t, cells0, nowMs, None)
 
   /** [[append]] with `knownBytes`, the batch's size when it is known
     * without a Spark job — it lets [[writeCells]] skip range sampling on
-    * a small batch. */
-  private def append(t: String, cells0: DataFrame, nowMs: Long,
+    * a small batch. A driver-resident batch measures itself. */
+  private[graft] def append(t: String, cells0: DataFrame, nowMs: Long,
       knownBytes0: Option[Long]): Manifest = {
     val cur = currentManifest(t)
     require(!cur.descriptor.readOnly, s"table $t is read-only")
@@ -1126,13 +1130,18 @@ final class Catalog(spark: SparkSession, root: String) {
     // re-executed shuffle after executor loss) would then write
     // different cells to the main table than to its indexes — a silent
     // desync a covered read never detects. Pin the batch to one
-    // evaluation before fanning out; index-free appends (the common
-    // path) evaluate once anyway and skip the materialization. That one
-    // evaluation also measures the batch's bytes (observed — no extra
-    // job), which sizes the writes below.
-    val (cells, knownBytes) =
-      if (cur.descriptor.indexes.isEmpty) (cells0, knownBytes0)
-      else {
+    // evaluation before fanning out. A driver-resident batch is pinned
+    // already: every use below reads back the rows of its optimized
+    // LocalRelation, which costs no job. Index-free appends evaluate
+    // once anyway and skip the materialization. Otherwise one
+    // checkpoint evaluation also measures the batch's bytes (observed —
+    // no extra job), which sizes the writes below.
+    val (cells, knownBytes) = Catalog.driverResident(cells0) match {
+      case Some(l) =>
+        (org.apache.spark.sql.graft.SparkInternals.ofRows(spark, l),
+          Some(Catalog.localBytes(l)))
+      case None if cur.descriptor.indexes.isEmpty => (cells0, knownBytes0)
+      case None =>
         import org.apache.spark.sql.Observation
         import org.apache.spark.sql.functions.{coalesce, col, lit, octet_length, sum}
         val obs = Observation()
@@ -1456,19 +1465,51 @@ object Catalog {
     * variable-length ones when [[Catalog.append]] measures a batch. */
   private[catalog] val FixedCellBytes = 17
 
-  /** In-memory bytes of a driver-resident batch — a `LocalRelation`
-    * plan, which [[graft.write.Mutations.toDF]] builds — read off its
-    * rows with no Spark job. None for any other plan. */
-  private[catalog] def localBytes(df: DataFrame): Option[Long] =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val sizes = l.data.collect {
-          case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
-            u.getSizeInBytes.toLong
-        }
-        if (sizes.size == l.data.size) Some(sizes.sum) else None
+  /** The rows of a DRIVER-RESIDENT batch: one whose optimized plan is a
+    * `LocalRelation` — [[graft.write.Mutations.toDF]], a
+    * `Seq(...).toDF(names)` (a Project the optimizer folds into its
+    * LocalRelation), or a filter of either. Its rows are fixed, and
+    * reading them back costs no Spark job. None for any other plan. */
+  private[graft] def driverResident(df: DataFrame)
+      : Option[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if !l.isStreaming => Some(l)
       case _ => None
     }
+
+  /** In-memory bytes of a [[driverResident]] batch, read off its rows
+    * with no Spark job: an UnsafeRow's own size, otherwise the sum of
+    * its fields' lengths (variable-length fields) and default sizes
+    * (fixed-width ones). */
+  private[catalog] def localBytes(
+      l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation): Long = {
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    val types = l.output.map(_.dataType).zipWithIndex
+    l.data.iterator.map {
+      case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
+        u.getSizeInBytes.toLong
+      case r => types.iterator.map {
+        case (_, i) if r.isNullAt(i) => 0L
+        case (BinaryType, i) => r.getBinary(i).length.toLong
+        case (StringType, i) => r.getUTF8String(i).numBytes.toLong
+        case (t, _) => t.defaultSize.toLong
+      }.sum
+    }.sum
+  }
+
+  /** Bytes of the files under `df` when every leaf of its plan is a file
+    * relation, read off the relations' file listings with no Spark job;
+    * None when any leaf is something else. */
+  private[graft] def fileBytes(df: DataFrame): Option[Long] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val leaves = df.queryExecution.analyzed.collectLeaves()
+    val sizes = leaves.collect {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.sizeInBytes
+    }
+    if (leaves.nonEmpty && sizes.size == leaves.size) Some(sizes.sum) else None
+  }
 
   /** How long a commit waits for a finished write's observed metrics.
     * They arrive with the write's completion (milliseconds); the bound

@@ -101,15 +101,19 @@ object Salt {
 
   /** Batch point-read scope over salted cells (the multiGet shape on the
     * SALTED sort order): each key salts JVM-side to its one storage key,
-    * the batch's span bounds prune the parquet scan, a broadcast
-    * semi-join picks the exact keys, and the result strips back to
-    * logical rows. O(batch) driver-side, one distributed pass. */
+    * the batch's span bounds prune the parquet scan, `row IN (keys)`
+    * (within [[graft.read.Resolve.maxKeys]] keys, the keyed read's
+    * scope) or a broadcast semi-join (above it) picks the exact keys,
+    * and the result strips back to logical rows. O(batch) driver-side,
+    * one distributed pass. */
   def scopeKeys(cells: DataFrame, n: Int, rows: Seq[Array[Byte]]): DataFrame = {
     require(rows.nonEmpty, "scopeKeys needs at least one key")
     checkN(n)
     val spark = cells.sparkSession
     import spark.implicits._
-    val salted = rows.map(saltedKey(_, n))
+    val salted = rows.map(saltedKey(_, n)).distinctBy(java.nio.ByteBuffer.wrap)
+    if (salted.sizeIs <= graft.read.Resolve.maxKeys(spark))
+      return stripCells(graft.read.ScanExec.keyScope(cells, salted))
     val ord: Ordering[Array[Byte]] = (a, b) => Bytes.compareTo(a, b)
     val lo = salted.min(ord)
     val hi = Bytes.successor(salted.max(ord))

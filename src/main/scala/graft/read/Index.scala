@@ -418,9 +418,10 @@ object SecondaryIndex {
     * `FilterList(MUST_PASS_ONE)` over one column. */
   def lookupOr(mainCells: DataFrame, index: DataFrame, family: String,
       qualifier: Array[Byte], arms: Seq[ValueArm],
-      broadcastMaxKeys: Long = DefaultBroadcastMaxKeys): DataFrame =
+      broadcastMaxKeys: Long = DefaultBroadcastMaxKeys,
+      keyed: Boolean = true): DataFrame =
     verifiedRows(
-      gatherHits(mainCells, probeOr(index, arms), broadcastMaxKeys),
+      gatherKeyed(mainCells, probeOr(index, arms), broadcastMaxKeys, keyed),
       family, qualifier, c => armsPred(c, arms))
 
   /** Covered OR lookup: the arm union answered from the index table
@@ -473,6 +474,35 @@ object SecondaryIndex {
     span.join(keyed, Seq("row"), "left_semi")
   }
 
+  /** The gather of the verified lookups: ONE job collects up to
+    * cap + 1 hit keys (cap = the smaller of [[Resolve.maxKeys]] and
+    * `broadcastMaxKeys`). Within the cap the candidates are the keyed
+    * read of those keys ([[ScanExec.keyScope]], [[ReadView.keyed]]) —
+    * no stats job, and no broadcast that re-runs the probe; above it,
+    * or when the caller asks for no `keyed` gather, the size-gated
+    * [[gatherHits]]. Returns the candidate cells and whether they are
+    * keyed. The SQL door asks for none: its routed plans keep the index
+    * scan until its routes are unified with this API's. */
+  private def gatherKeyed(mainCells: DataFrame, hits: DataFrame,
+      broadcastMaxKeys: Long, keyed: Boolean): (DataFrame, Boolean) = {
+    if (!keyed) return (gatherHits(mainCells, hits, broadcastMaxKeys), false)
+    val cap = math.min(Resolve.maxKeys(mainCells.sparkSession).toLong,
+      broadcastMaxKeys)
+    val keys = hits.limit((cap + 1).toInt).collect().map(_.getAs[Array[Byte]](0))
+    if (keys.length > cap) (gatherHits(mainCells, hits, broadcastMaxKeys), false)
+    else if (keys.isEmpty) (mainCells.limit(0), true)
+    else (ScanExec.keyScope(mainCells, keys.toSeq), true)
+  }
+
+  /** [[gatherKeyed]] of the [[probe]]/[[probeAll]] hits of `values`. */
+  private def gatherValues(mainCells: DataFrame, index: DataFrame,
+      values: Seq[Array[Byte]], broadcastMaxKeys: Long,
+      keyed: Boolean): (DataFrame, Boolean) =
+    gatherKeyed(mainCells,
+      if (values.sizeIs == 1) probe(index, values.head)
+      else probeAll(index, values),
+      broadcastMaxKeys, keyed)
+
   /** Index-backed equality lookup: probe (small) -> gather the hit keys
     * into the main cell scan (size-gated broadcast) -> resolve with the
     * verifying `SingleColumnValueFilter`, which both re-checks the indexed
@@ -495,10 +525,11 @@ object SecondaryIndex {
     * SingleColumnValueFilter, which is single-comparator). */
   def lookupAll(mainCells: DataFrame, index: DataFrame, family: String,
       qualifier: Array[Byte], values: Seq[Array[Byte]],
-      broadcastMaxKeys: Long = DefaultBroadcastMaxKeys): DataFrame =
+      broadcastMaxKeys: Long = DefaultBroadcastMaxKeys,
+      keyed: Boolean = true): DataFrame =
     verifiedRows(
-      gather(mainCells, index, values, broadcastMaxKeys), family, qualifier,
-      c => orAll(values.map(v => c === lit(v))))
+      gatherValues(mainCells, index, values, broadcastMaxKeys, keyed), family,
+      qualifier, c => orAll(values.map(v => c === lit(v))))
 
   /** Index-backed RANGE lookup (`value in [lo, hi)`, bounds optional,
     * VALUE space, lo inclusive / hi exclusive): one [[probeRange]] pass,
@@ -515,10 +546,10 @@ object SecondaryIndex {
       qualifier: Array[Byte], lo: Option[Array[Byte]],
       hi: Option[Array[Byte]],
       broadcastMaxKeys: Long = DefaultBroadcastMaxKeys,
-      exactPrefix: Boolean = true): DataFrame =
+      exactPrefix: Boolean = true, keyed: Boolean = true): DataFrame =
     verifiedRows(
-      gatherHits(mainCells, probeRange(index, lo, hi, exactPrefix),
-        broadcastMaxKeys),
+      gatherKeyed(mainCells, probeRange(index, lo, hi, exactPrefix),
+        broadcastMaxKeys, keyed),
       family, qualifier,
       c => (lo.map(b => c >= lit(b)) ++ hi.map(b => c < lit(b))).reduce(_ && _))
 
@@ -527,12 +558,12 @@ object SecondaryIndex {
     * satisfies `valuePred` — stale index hits (updates, deletes) are
     * false positives this eliminates; false negatives cannot happen
     * (every put is indexed). */
-  private def verifiedRows(candidates: DataFrame, family: String,
+  private def verifiedRows(candidates: (DataFrame, Boolean), family: String,
       qualifier: Array[Byte],
       valuePred: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val resolved = ScanExec(candidates, Scan())
+    val resolved = ScanExec(candidates._1, Scan(), keyed = candidates._2)
     val isTest = col("family") === family && col("qualifier") === lit(qualifier)
     resolved
       .withColumn("_idx_ok",
@@ -646,7 +677,8 @@ object SecondaryIndex {
   def lookupCompositeAll(mainCells: DataFrame, index: DataFrame,
       columns: Seq[(String, Array[Byte])],
       valueLists: Seq[Seq[Array[Byte]]],
-      broadcastMaxKeys: Long = DefaultBroadcastMaxKeys): DataFrame = {
+      broadcastMaxKeys: Long = DefaultBroadcastMaxKeys,
+      keyed: Boolean = true): DataFrame = {
     require(columns.size == valueLists.size && columns.sizeIs >= 2,
       "lookupCompositeAll needs one value list per composite column")
     require(valueLists.forall(_.nonEmpty),
@@ -656,8 +688,9 @@ object SecondaryIndex {
       .map(_.map(Seq(_)))
       .reduce((as, bs) => for { a <- as; b <- bs } yield a ++ b)
       .map(compositeBlob)
-    val candidates = gather(mainCells, index, blobs, broadcastMaxKeys)
-    val resolved = ScanExec(candidates, Scan())
+    val (candidates, scoped) =
+      gatherValues(mainCells, index, blobs, broadcastMaxKeys, keyed)
+    val resolved = ScanExec(candidates, Scan(), keyed = scoped)
     val w = Window.partitionBy("row")
     val flags = columns.zip(valueLists).zipWithIndex.map {
       case (((f, q), vs), i) =>

@@ -17,6 +17,14 @@ import org.apache.spark.sql.functions._
   *    (`ScanQueryMatcher.java:56,76`); `now` is caller-supplied so plans
   *    are deterministic across executors
   *  - `asOf`: upper timestamp bound for snapshot-style time travel
+  *  - `keyed`: a KEYED read — the caller guarantees the frame is already
+  *    restricted to a driver-held set of at most [[Resolve.maxKeys]] row
+  *    keys (a Get, a multiGet within the cap, an index lookup's collected
+  *    hits, the current values of a driver-resident increment or
+  *    checkAndMutate), the reference's one-row scan on the one server
+  *    that holds the row (`HRegion.java:3080`). [[Resolve.masked]] then
+  *    runs no tombstone probe, and no row exchange when the frame's
+  *    files fit one split: the read is one job.
   */
 case class ReadView(
     maxVersions: Int = 1,
@@ -36,7 +44,8 @@ case class ReadView(
     // input is an expensive derived frame whose re-evaluation the probe
     // would pay); None (default) = [[Resolve.masked]] decides — written
     // store stats first (zero jobs), then the limit-1 probe.
-    tombstoneFree: Option[Boolean] = None)
+    tombstoneFree: Option[Boolean] = None,
+    keyed: Boolean = false)
 
 /** The keystone transform (SURVEY.md §7.2): reproduces the reference's
   * per-cell visibility pipeline — tombstone masking
@@ -70,11 +79,22 @@ object Resolve {
   def apply(cells: DataFrame, view: ReadView = ReadView()): DataFrame =
     finish(masked(cells, view), view)
 
+  /** Cap on a keyed read's driver-held key set: the session's
+    * `spark.graft.runtimeFilter.maxKeys` (default 1,024), the one cap on
+    * driver-held key sets. */
+  def maxKeys(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.conf.get("spark.graft.runtimeFilter.maxKeys", "1024").toInt
+
   /** Stage 1 — visibility WITHOUT the version cap: tombstone masking +
     * asOf + TTL + time range. A row/column is present here iff it is
     * present in the full resolve (the version cap never eliminates a
     * column entirely), which lets row-set consumers (PageFilter paging,
-    * existence checks) stop after this cheaper stage. */
+    * existence checks) stop after this cheaper stage.
+    *
+    * In keyed mode ([[ReadView.keyed]]) the stage runs no tombstone
+    * probe and, when the frame's files fit one split, no exchange: the
+    * whole read is one job. Its answer is the same as the distributed
+    * one's. */
   def masked(cells: DataFrame, view: ReadView = ReadView()): DataFrame = {
     val k = col("kind")
 
@@ -104,8 +124,12 @@ object Resolve {
     // delete tracking when a store has no tombstones. The probe, when
     // it runs, is priced inside the query it serves every run (never
     // cached across runs).
+    //
+    // A KEYED read ([[ReadView.keyed]]) never probes: its masking
+    // windows only see the cells of its few keys, which costs less than
+    // the probe's job. The stats proof still applies first.
     val tombstoneFree = view.tombstoneFree.getOrElse(
-      !base0.isStreaming && (provablyTombstoneFree(base0) || {
+      !base0.isStreaming && (provablyTombstoneFree(base0) || !view.keyed && {
         try base0.filter(k =!= CellKind.Put).isEmpty
         catch { case scala.util.control.NonFatal(_) => false }
       }))
@@ -134,7 +158,17 @@ object Resolve {
     // with adversarial row widths own the fix at WRITE time (salted key
     // design / splitBoundaries), not in the resolve. Correctness under a
     // hot row is pinned by ResolveSpec ("hot row skew posture").
-    val base = base0.repartition(col("row"))
+    //
+    // A KEYED read over files that fit one split
+    // (`spark.sql.files.maxPartitionBytes`, sized from the file listing
+    // with no job) takes ONE partition instead: SinglePartition
+    // satisfies every clustering above, so the read plans no exchange
+    // and runs as one job. The gate bounds what that single task scans;
+    // anything larger, or any frame whose leaves are not all file
+    // relations, keeps the exchange.
+    val single = view.keyed && graft.catalog.Catalog.fileBytes(base0).exists(
+      _ <= base0.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+    val base = if (single) base0.coalesce(1) else base0.repartition(col("row"))
 
     val maskedPuts =
       if (tombstoneFree) base.filter(k === CellKind.Put)

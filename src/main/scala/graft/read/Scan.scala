@@ -71,10 +71,13 @@ case class Get(
   * SURVEY §4), then version resolution, then the pushed filter. */
 object ScanExec {
 
+  /** `keyed`: `cells` is already restricted to a driver-held key set
+    * within [[Resolve.maxKeys]] — see [[ReadView.keyed]]. */
   def apply(cells: DataFrame, scan: Scan, ttlMs: Option[Long] = None,
       now: Long = 0L, asOf: Option[Long] = None,
       familyMaxVersions: Map[String, Int] = Map.empty,
-      familyTtlMs: Map[String, Long] = Map.empty): DataFrame = {
+      familyTtlMs: Map[String, Long] = Map.empty,
+      keyed: Boolean = false): DataFrame = {
     // Row-range pruning (client META routing / region pruning analog).
     var df = cells
     scan.startRow.foreach(r => df = df.filter(col("row") >= lit(r)))
@@ -95,7 +98,7 @@ object ScanExec {
     }
 
     val view = ReadView(scan.maxVersions, scan.timeRange, ttlMs, now, asOf,
-      familyMaxVersions, familyTtlMs)
+      familyMaxVersions, familyTtlMs, keyed = keyed)
 
     scan.filter match {
       // PageFilter fast path, BOUNDED SEEK: the page's first-N visible row
@@ -165,21 +168,37 @@ object ScanExec {
     }
   }
 
-  /** Get as a 1-row scan — one code path, like the reference. */
+  /** Get as a 1-row scan — one code path, like the reference. Its one
+    * key makes it a keyed read ([[ReadView.keyed]]): one job on a table
+    * that fits one split. */
   def get(cells: DataFrame, g: Get, ttlMs: Option[Long] = None,
       now: Long = 0L): DataFrame = {
     // Exact-row match (tighter than the prefix range from toScan).
     val scoped = cells.filter(col("row") === lit(g.row))
-    ScanExec(scoped, g.toScan.copy(startRow = None, stopRow = None), ttlMs, now)
+    ScanExec(scoped, g.toScan.copy(startRow = None, stopRow = None), ttlMs, now,
+      keyed = true)
+  }
+
+  /** `cells` restricted to a driver-held key set, the scope of a keyed
+    * read: the keys' span `[min, succ(max))`, which parquet min/max
+    * stats prune on, and `row IN (keys)`. */
+  def keyScope(cells: DataFrame, keys: Seq[Array[Byte]]): DataFrame = {
+    require(keys.nonEmpty, "keyScope needs at least one key")
+    val ord: Ordering[Array[Byte]] = (a, b) => Bytes.compareTo(a, b)
+    cells.filter(col("row") >= lit(keys.min(ord)) &&
+      col("row") < lit(Bytes.successor(keys.max(ord))) &&
+      col("row").isin(keys: _*))
   }
 
   /** `HTable.exists:651` — Get returning only a boolean. */
   def exists(cells: DataFrame, g: Get): Boolean = !get(cells, g).isEmpty
 
   /** Batch point reads — `HTable.get(List<Get>):692` — as ONE distributed
-    * job: the key set broadcasts into a semi-join against the sorted
-    * layout (row-group pruning applies per key range via the bloom/minmax
-    * stats), then a single shared resolve. The reference issues one RPC
+    * job: within [[Resolve.maxKeys]] distinct keys the batch is a keyed
+    * read (`row IN (keys)`, [[ReadView.keyed]]); above it the key set
+    * broadcasts into a semi-join against the sorted layout. Row-group
+    * pruning applies per key range via the bloom/minmax stats, then a
+    * single shared resolve. The reference issues one RPC
     * per region batch; a driver-side loop of single Gets here would pay
     * one Spark job per key. All gets share `scan`'s projection/time/
     * version options (the common batch shape); caller-supplied row bounds
@@ -194,7 +213,11 @@ object ScanExec {
     if (rows.isEmpty) return cells.limit(0)
     val spark = cells.sparkSession
     import spark.implicits._
-    val keys = broadcast(rows.toDF("row"))
+    val distinct = rows.distinctBy(java.nio.ByteBuffer.wrap)
+    val keyed = distinct.sizeIs <= Resolve.maxKeys(spark)
+    val scoped =
+      if (keyed) cells.filter(col("row").isin(distinct: _*))
+      else cells.join(broadcast(rows.toDF("row")), Seq("row"), "left_semi")
     // [min, succ(max)) bounds derived from the batch: the semi-join alone
     // can't prune the parquet scan, but the keys' span can — the
     // reference's batch get routes each key to its region for the same
@@ -205,9 +228,10 @@ object ScanExec {
     val hi = Bytes.successor(rows.max(ord))
     val start = (scan.startRow.toSeq :+ lo).max(ord)
     val stop = (scan.stopRow.toSeq :+ hi).min(ord)
-    ScanExec(cells.join(keys, Seq("row"), "left_semi"),
+    ScanExec(scoped,
       scan.copy(startRow = Some(start), stopRow = Some(stop)), ttlMs, now,
-      familyMaxVersions = familyMaxVersions, familyTtlMs = familyTtlMs)
+      familyMaxVersions = familyMaxVersions, familyTtlMs = familyTtlMs,
+      keyed = keyed)
   }
 
   /** `getRowOrBefore` (`HTable.java:472`, `Store.getRowKeyAtOrBefore:980`):

@@ -1818,12 +1818,14 @@ class GraftWideScan(engine: Catalog, baseTable: String, spec: WideSpec,
         // columns after the whole-row verify
         val hit = pred match {
           case GraftValueIn(vs) => SecondaryIndex.lookupAll(logical,
-            indexCells(ix.indexTable), c.family, c.qualifier, vs)
+            indexCells(ix.indexTable), c.family, c.qualifier, vs,
+            keyed = false)
           case GraftValueRange(lo, hi) => SecondaryIndex.lookupRange(logical,
             indexCells(ix.indexTable), c.family, c.qualifier, lo, hi,
-            exactPrefix = ix.moreColumns.isEmpty)
+            exactPrefix = ix.moreColumns.isEmpty, keyed = false)
           case GraftValueOr(arms) => SecondaryIndex.lookupOr(logical,
-            indexCells(ix.indexTable), c.family, c.qualifier, arms)
+            indexCells(ix.indexTable), c.family, c.qualifier, arms,
+            keyed = false)
         }
         visible(keepWanted(boundsFilter(hit)))
       case Some(WideComposite(ix, valueLists)) =>
@@ -1831,7 +1833,8 @@ class GraftWideScan(engine: Catalog, baseTable: String, spec: WideSpec,
         // pass over the bounded blob cartesian + gather + every-member
         // verify against each member's list
         visible(keepWanted(boundsFilter(SecondaryIndex.lookupCompositeAll(
-          logical, indexCells(ix.indexTable), ix.columns, valueLists))))
+          logical, indexCells(ix.indexTable), ix.columns, valueLists,
+          keyed = false))))
       case Some(WideCompositeOr(ix, tuples)) =>
         // OR of tuples: the union of the disjuncts' blob cartesians in
         // ONE gather pass; candidates resolve like any scan and the

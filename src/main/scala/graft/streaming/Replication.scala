@@ -65,11 +65,23 @@ object Replication {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          catalog.append(targetTable, batch, nowMsOf(batchId)): Unit
-        }
+        appendBatch(catalog, targetTable, batch, nowMsOf(batchId)): Unit
       }
       .start()
+
+  /** Append one micro-batch, sized and tested for emptiness with no
+    * Spark job; an empty batch commits nothing (false). The sink hands
+    * `foreachBatch` a LogicalRDD — so `inputFiles` is empty there — that
+    * carries the file source relation's statistics: the lengths of the
+    * batch's files. Passing them on lets [[Catalog.append]] write a
+    * small batch as one sorted partition, with no range sampling. */
+  private def appendBatch(catalog: Catalog, table: String, batch: DataFrame,
+      nowMs: Long): Boolean = {
+    val size = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (size > 0)
+      catalog.append(table, batch, nowMs, Some(size).filter(_.isValidLong).map(_.toLong))
+    size > 0
+  }
 
   /** [[replicate]] with the reference's flush-triggered maintenance loop:
     * after every flush the region server asks for a compaction check
@@ -100,9 +112,8 @@ object Replication {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val now = nowMsOf(batchId)
-          target.g.catalog.append(target.name, batch, now): Unit
+        val now = nowMsOf(batchId)
+        if (appendBatch(target.g.catalog, target.name, batch, now)) {
           val folded = target.minorCompact(now, ratio, minBatches, maxBatches)
           if (folded.nonEmpty && keepVersions > 0) {
             target.g.catalog.expireVersions(target.name, keepVersions)

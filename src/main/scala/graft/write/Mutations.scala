@@ -1,9 +1,11 @@
 package graft.write
 
 import graft.core.{Bytes, Cell, CellKind}
-import graft.read.{ReadView, Resolve}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.read.{ReadView, Resolve, ScanExec}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, ByteType, DataType, IntegerType,
+  LongType, ShortType, StringType}
 
 /** Client-side mutation builders — reference `hbase/client/Put.java:47`,
   * `hbase/client/Delete.java:68`. A mutation is just a list of cells; a
@@ -94,12 +96,27 @@ object Mutations {
     * added to the current latest value (absent -> 0) and written back as a
     * new version at `batchTs`. Returns the new counter cells to append.
     *
-    * Scale: one partial-aggregated groupBy on the (small) increment batch +
-    * one join against the current-latest view restricted to touched rows —
-    * the view filter is a broadcast semi-join on the batch's row keys.
+    * Scale: a driver-resident batch (`Catalog.driverResident`) of at most
+    * [[Resolve.maxKeys]] distinct rows is the reference's row-locked
+    * read-modify-write: ONE keyed read of the current values
+    * ([[ReadView.keyed]]), the sums computed on the driver, and the new
+    * cells returned as a driver-resident batch, so the commit writes them
+    * with no checkpoint. `scope` restricts the table to a key set (on a
+    * salted table, `Salt.scopeKeys`). Any other batch runs distributed:
+    * one partial-aggregated groupBy + one join against the current-latest
+    * view restricted to touched rows by a semi-join on the batch's keys.
     */
   def increment(table: DataFrame, increments: DataFrame, batchTs: Long,
-      seq: Long = 0L): DataFrame = {
+      seq: Long = 0L,
+      scope: Option[Seq[Array[Byte]] => DataFrame] = None): DataFrame =
+    keyedRows(increments, "delta", Set(ByteType, ShortType, IntegerType, LongType))
+      .fold(incrementDistributed(table, increments, batchTs, seq)) { rows =>
+        incrementKeyed(table, increments.sparkSession, rows, batchTs, seq,
+          scope)
+      }
+
+  private def incrementDistributed(table: DataFrame, increments: DataFrame,
+      batchTs: Long, seq: Long): DataFrame = {
     val deltas = increments
       .groupBy("row", "family", "qualifier")
       .agg(sum(col("delta")).as("_delta"))
@@ -122,6 +139,32 @@ object Mutations {
         lit(seq).as("seq"))
   }
 
+  /** [[increment]] of a driver-resident batch, with the distributed
+    * path's semantics: null deltas are skipped and an all-null sum
+    * writes a null value, a null key field matches no current cell, a
+    * current value of any length decodes as `Bytes.asLong` does, and
+    * under ANSI an overflow raises as Spark's `sum` and `+` do. */
+  private def incrementKeyed(table: DataFrame, spark: SparkSession,
+      rows: Array[Row], batchTs: Long, seq: Long,
+      scope: Option[Seq[Array[Byte]] => DataFrame]): DataFrame = {
+    import spark.implicits._
+    val ansi = spark.sessionState.conf.ansiEnabled
+    def add(a: Long, b: Long) = if (ansi) Math.addExact(a, b) else a + b
+    val sums = scala.collection.mutable.LinkedHashMap[Coord, Option[Long]]()
+    rows.foreach { r =>
+      val k = coord(r)
+      val d = Option(r.getAs[Any]("delta")).map(_.asInstanceOf[Number].longValue)
+      sums(k) = (sums.getOrElse(k, None) ++ d).reduceOption(add)
+    }
+    val cur = currentValues(table, rows, scope)
+    sums.toSeq.map { case (k @ (r, f, q), d) =>
+      val base = cur.get(k).flatMap(Option(_))
+        .map(graft.functions.VectorExprUtil.bitsToLong).getOrElse(0L)
+      Cell(r.map(_.array).orNull, f.orNull, q.map(_.array).orNull, batchTs,
+        CellKind.Put, d.map(x => Bytes.toBytes(add(base, x))).orNull, seq)
+    }.toDF()
+  }
+
   /** `checkAndPut`/`checkAndDelete` (`HRegion.checkAndMutate:1544`): apply
     * each row's mutation cells only when the current latest value of the
     * check column equals `expected` (null expected = "column absent",
@@ -130,8 +173,34 @@ object Mutations {
     *
     * `checks`: (row, family, qualifier, expected) one per mutated row;
     * `batch`: the candidate mutation cells. Returns the accepted subset.
+    *
+    * Scale: driver-resident `checks` of at most [[Resolve.maxKeys]]
+    * distinct rows read the current values in ONE keyed read, decide
+    * each check on the driver (`expected <=> current`), and keep the
+    * accepted rows with `row IN (accepted)` — a driver-resident `batch`
+    * stays driver-resident. `scope` as in [[increment]]. Any other
+    * `checks` run distributed: a join against the current-latest view
+    * restricted to the checked rows by a semi-join.
     */
-  def checkAndMutate(table: DataFrame, checks: DataFrame, batch: DataFrame): DataFrame = {
+  def checkAndMutate(table: DataFrame, checks: DataFrame, batch: DataFrame,
+      scope: Option[Seq[Array[Byte]] => DataFrame] = None): DataFrame =
+    keyedRows(checks, "expected", Set(BinaryType)) match {
+      case Some(rows) =>
+        val cur = currentValues(table, rows, scope)
+        val accepted = rows.filter { r =>
+          val expected = r.getAs[Array[Byte]]("expected")
+          cur.get(coord(r)).flatMap(Option(_)) match {
+            case None => expected == null
+            case Some(v) => expected != null && java.util.Arrays.equals(expected, v)
+          }
+        }.flatMap(r => Option(r.getAs[Array[Byte]]("row")))
+        batch.filter(
+          if (accepted.isEmpty) lit(false) else col("row").isin(accepted.toSeq: _*))
+      case None => checkAndMutateDistributed(table, checks, batch)
+    }
+
+  private def checkAndMutateDistributed(table: DataFrame, checks: DataFrame,
+      batch: DataFrame): DataFrame = {
     val current = Resolve(
       table.join(checks.select("row"), Seq("row"), "left_semi"),
       CurrentValue)
@@ -146,13 +215,63 @@ object Mutations {
     batch.join(accepted, Seq("row"), "left_semi")
   }
 
-  /** The current-value read of [[increment]] and [[checkAndMutate]]:
-    * newest version, full tombstone masking without the probe (see
-    * [[ReadView.tombstoneFree]]). Their frame is semi-joined to the
-    * batch's rows, so masking it costs less than the probe, which
-    * re-runs the semi-join — three jobs on any table holding a
-    * tombstone. */
+  /** The current-value read of the distributed [[increment]] and
+    * [[checkAndMutate]]: newest version, full tombstone masking without
+    * the probe (see [[ReadView.tombstoneFree]]). Their frame is
+    * semi-joined to the batch's rows, so masking it costs less than the
+    * probe, which re-runs the semi-join — three jobs on any table
+    * holding a tombstone. */
   private val CurrentValue = ReadView(maxVersions = 1, tombstoneFree = Some(false))
+
+  /** A (row, family, qualifier) coordinate with content equality; None
+    * stands for a null field, which no table cell matches. */
+  private type Coord = (Option[java.nio.ByteBuffer], Option[String],
+    Option[java.nio.ByteBuffer])
+
+  private def coord(r: Row): Coord = (
+    Option(r.getAs[Array[Byte]]("row")).map(java.nio.ByteBuffer.wrap),
+    Option(r.getAs[String]("family")),
+    Option(r.getAs[Array[Byte]]("qualifier")).map(java.nio.ByteBuffer.wrap))
+
+  /** The rows of a driver-resident (`Catalog.driverResident`) batch with
+    * binary `row`/`qualifier`, string `family` and a `valueCol` of one of
+    * `valueTypes`, read with no Spark job — when it holds at most
+    * [[Resolve.maxKeys]] distinct rows. None sends the caller down its
+    * distributed path. */
+  private def keyedRows(batch: DataFrame, valueCol: String,
+      valueTypes: Set[DataType]): Option[Array[Row]] = {
+    val types = batch.schema.fields.map(f => f.name -> f.dataType).toMap
+    val shaped = types.get("row").contains(BinaryType) &&
+      types.get("family").contains(StringType) &&
+      types.get("qualifier").contains(BinaryType) &&
+      types.get(valueCol).exists(valueTypes)
+    if (!shaped) None
+    else graft.catalog.Catalog.driverResident(batch).flatMap { l =>
+      val rows = org.apache.spark.sql.graft.SparkInternals
+        .ofRows(batch.sparkSession, l).collect()
+      val keys = rows.flatMap(r => Option(r.getAs[Array[Byte]]("row")))
+        .distinctBy(java.nio.ByteBuffer.wrap)
+      if (keys.length <= Resolve.maxKeys(batch.sparkSession)) Some(rows) else None
+    }
+  }
+
+  /** Newest visible value of every checked/incremented coordinate of
+    * `rows`, in ONE keyed read ([[ReadView.keyed]]) of their row keys,
+    * restricted to their families (masking is per (row, family), so the
+    * families' tombstones all stay in). A null value is kept as null. */
+  private def currentValues(table: DataFrame, rows: Array[Row],
+      scope: Option[Seq[Array[Byte]] => DataFrame]): Map[Coord, Array[Byte]] = {
+    val keys = rows.flatMap(r => Option(r.getAs[Array[Byte]]("row")))
+      .distinctBy(java.nio.ByteBuffer.wrap).toSeq
+    val fams = rows.flatMap(r => Option(r.getAs[String]("family"))).distinct.toSeq
+    if (keys.isEmpty || fams.isEmpty) return Map.empty
+    val scoped = scope.getOrElse((ks: Seq[Array[Byte]]) =>
+      ScanExec.keyScope(table, ks))(keys)
+    Resolve(scoped.filter(col("family").isin(fams: _*)),
+      ReadView(maxVersions = 1, keyed = true))
+      .select("row", "family", "qualifier", "value").collect()
+      .map(r => coord(r) -> r.getAs[Array[Byte]]("value")).toMap
+  }
 
   private def longToBytes(c: org.apache.spark.sql.Column) =
     graft.core.CellCodec.longBytes(c)

@@ -17,6 +17,36 @@ trait SparkSpec extends AnyFunSuite {
     spark.createDataset(cs)
   }
 
+  /** Spark jobs `f` submits from this thread, counted through a job
+    * group (so a parallel suite's jobs on the shared context never
+    * count) once the asynchronous listener bus has settled. */
+  def jobsOf(f: => Unit): Int = {
+    val group = s"jobsof-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (group == js.properties.getProperty("spark.jobGroup.id"))
+          n.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.setJobGroup(group, "SparkSpec.jobsOf")
+    try {
+      f
+      var last = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val c = n.get
+        if (c == last) stable += 1 else { stable = 0; last = c }
+      }
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(l)
+    }
+    n.get
+  }
+
   /** (rowString, familyString, qualifierString, ts, valueString) tuples of a
     * resolved cell frame — convenient for assertions. */
   def collectCells(df: DataFrame): Set[(String, String, String, Long, String)] = {
